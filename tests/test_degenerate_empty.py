@@ -58,10 +58,7 @@ EMPTY_OPS = sorted(n for n in ORACLE if n != "sql_rewards_summary")
 def degen_empty(spark, tmp_path_factory):
     import duckdb
 
-    from helium_arango_etl_spark.operators.dedup import clear_sig_cache
-    from helium_arango_etl_spark.operators.graph import clear_edge_cache
-    from helium_arango_etl_spark.operators.similarity import clear_emb_cache
-    from helium_arango_etl_spark.operators.textops import clear_tok_cache
+    from helium_arango_etl_spark import shared
 
     tmp = str(tmp_path_factory.mktemp("degen_empty"))
     for t, sch in SCHEMAS.items():
@@ -71,11 +68,9 @@ def degen_empty(spark, tmp_path_factory):
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM '{tmp}/{t}.parquet/*.parquet'"
         )
-    for clear in (clear_edge_cache, clear_sig_cache, clear_emb_cache, clear_tok_cache):
-        clear(spark)
+    shared.clear(spark, "witness", "sig", "emb", "tok")
     yield tmp, con
-    for clear in (clear_edge_cache, clear_sig_cache, clear_emb_cache, clear_tok_cache):
-        clear(spark)
+    shared.clear(spark, "witness", "sig", "emb", "tok")
 
 
 @pytest.mark.parametrize("name", EMPTY_OPS)

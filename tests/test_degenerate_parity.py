@@ -89,8 +89,7 @@ def _regen_seed_fixture(spark, tmp_path_factory, seed: int, degen: bool = False)
 
 @pytest.fixture(scope="module")
 def degen(spark, tmp_path_factory):
-    from helium_arango_etl_spark.operators.dedup import clear_sig_cache
-    from helium_arango_etl_spark.operators.textops import clear_tok_cache
+    from helium_arango_etl_spark import shared
 
     tmp = str(tmp_path_factory.mktemp("degen_parity"))
     spark.createDataFrame(DEGENERATE_ROWS, DOC_SCHEMA).write.mode("overwrite").parquet(
@@ -101,11 +100,9 @@ def degen(spark, tmp_path_factory):
         "CREATE VIEW documents AS SELECT * FROM "
         f"'{tmp}/documents.parquet/*.parquet'"
     )
-    clear_sig_cache(spark)
-    clear_tok_cache(spark)
+    shared.clear(spark, "sig", "tok")
     yield tmp, con
-    clear_sig_cache(spark)
-    clear_tok_cache(spark)
+    shared.clear(spark, "sig", "tok")
 
 
 def test_docs_only_op_inventory_is_substantial():
@@ -250,7 +247,7 @@ EMB_ONLY_OPS = sorted(
 
 @pytest.fixture(scope="module")
 def degen_emb(spark, tmp_path_factory):
-    from helium_arango_etl_spark.operators.similarity import clear_emb_cache
+    from helium_arango_etl_spark import shared
 
     tmp = str(tmp_path_factory.mktemp("degen_emb"))
     spark.createDataFrame(_degenerate_embeddings(), EMB_SCHEMA).write.mode(
@@ -261,9 +258,9 @@ def degen_emb(spark, tmp_path_factory):
         "CREATE VIEW embeddings AS SELECT * FROM "
         f"'{tmp}/embeddings.parquet/*.parquet'"
     )
-    clear_emb_cache(spark)
+    shared.clear(spark, "emb")
     yield tmp, con
-    clear_emb_cache(spark)
+    shared.clear(spark, "emb")
 
 
 def test_emb_only_op_inventory_is_substantial():
@@ -442,10 +439,7 @@ MULTI_TABLE_OPS = sorted(
 
 @pytest.fixture(scope="module")
 def degen_all(spark, tmp_path_factory):
-    from helium_arango_etl_spark.operators.dedup import clear_sig_cache
-    from helium_arango_etl_spark.operators.graph import clear_edge_cache
-    from helium_arango_etl_spark.operators.similarity import clear_emb_cache
-    from helium_arango_etl_spark.operators.textops import clear_tok_cache
+    from helium_arango_etl_spark import shared
 
     tmp = str(tmp_path_factory.mktemp("degen_all"))
     _combined_fixture(spark, tmp)
@@ -457,11 +451,9 @@ def degen_all(spark, tmp_path_factory):
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM '{tmp}/{t}.parquet/*.parquet'"
         )
-    for clear in (clear_edge_cache, clear_sig_cache, clear_emb_cache, clear_tok_cache):
-        clear(spark)
+    shared.clear(spark, "witness", "sig", "emb", "tok")
     yield tmp, con
-    for clear in (clear_edge_cache, clear_sig_cache, clear_emb_cache, clear_tok_cache):
-        clear(spark)
+    shared.clear(spark, "witness", "sig", "emb", "tok")
 
 
 def test_multi_table_inventory_covers_the_rest():
@@ -645,12 +637,12 @@ def test_seed25_silhouette_and_seed34_zero_centroid(spark, tmp_path_factory):
             "CREATE VIEW embeddings AS SELECT * FROM "
             f"'{tmp}/embeddings.parquet/*.parquet'"
         )
-        from helium_arango_etl_spark.operators.similarity import clear_emb_cache
+        from helium_arango_etl_spark import shared
 
         for name in names:
-            clear_emb_cache(spark)
+            shared.clear(spark, "emb")
             _compare(spark, tmp, con, name)
-        clear_emb_cache(spark)
+        shared.clear(spark, "emb")
 
 
 def test_degen_seed41_celebrity_binds_cap_cross_engine(spark, tmp_path_factory):
@@ -663,7 +655,7 @@ def test_degen_seed41_celebrity_binds_cap_cross_engine(spark, tmp_path_factory):
     graph."""
     import duckdb
 
-    from helium_arango_etl_spark.operators.graph import clear_edge_cache
+    from helium_arango_etl_spark import shared
 
     tmp, mod = _regen_seed_fixture(spark, tmp_path_factory, 41, degen=True)
     con = duckdb.connect()
@@ -671,7 +663,7 @@ def test_degen_seed41_celebrity_binds_cap_cross_engine(spark, tmp_path_factory):
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM '{tmp}/{t}.parquet/*.parquet'"
         )
-    clear_edge_cache(spark)
+    shared.clear(spark, "witness")
     try:
         exact = QUERIES["co_witness_pairs"](spark, tmp).count()
         capped = QUERIES["co_witness_pairs_capped"](spark, tmp).count()
@@ -696,7 +688,7 @@ def test_degen_seed41_celebrity_binds_cap_cross_engine(spark, tmp_path_factory):
         ):
             _compare(spark, tmp, con, name)
     finally:
-        clear_edge_cache(spark)
+        shared.clear(spark, "witness")
 
 
 def test_degen_seed46_dim_stats_propagation(spark, tmp_path_factory):
@@ -708,7 +700,7 @@ def test_degen_seed46_dim_stats_propagation(spark, tmp_path_factory):
     guard the propagation path."""
     import duckdb
 
-    from helium_arango_etl_spark.operators.similarity import clear_emb_cache
+    from helium_arango_etl_spark import shared
 
     tmp, _ = _regen_seed_fixture(spark, tmp_path_factory, 46, degen=True)
     con = duckdb.connect()
@@ -718,10 +710,10 @@ def test_degen_seed46_dim_stats_propagation(spark, tmp_path_factory):
     )
     try:
         for name in ("embedding_dim_stats", "embedding_whiten_audit"):
-            clear_emb_cache(spark)
+            shared.clear(spark, "emb")
             _compare(spark, tmp, con, name)
     finally:
-        clear_emb_cache(spark)
+        shared.clear(spark, "emb")
 
 
 def test_degen_seed31_theil_and_hurst(spark, tmp_path_factory):
@@ -892,7 +884,7 @@ def test_degen_seed87_gini_threshold_half_cent(spark, tmp_path_factory):
 def test_bpe_survives_fully_merged_words(spark, tmp_path_factory):
     import duckdb
 
-    from helium_arango_etl_spark.operators.textops import clear_tok_cache
+    from helium_arango_etl_spark import shared
 
     tmp = str(tmp_path_factory.mktemp("bpe_tiny"))
     # two-char words merge to a single symbol on their first rule
@@ -906,9 +898,9 @@ def test_bpe_survives_fully_merged_words(spark, tmp_path_factory):
         "CREATE VIEW documents AS SELECT * FROM "
         f"'{tmp}/documents.parquet/*.parquet'"
     )
-    clear_tok_cache(spark)
+    shared.clear(spark, "tok")
     try:
         for name in ("bpe_merge_rules", "bpe_encode_stats"):
             _compare(spark, tmp, con, name)
     finally:
-        clear_tok_cache(spark)
+        shared.clear(spark, "tok")

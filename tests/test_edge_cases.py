@@ -8,7 +8,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from helium_arango_etl_spark.operators.dedup import clear_sig_cache
+from helium_arango_etl_spark import shared
 from helium_arango_etl_spark.registry import QUERIES
 
 DOC_SCHEMA = "doc_id long, text string, lang string, source string, n_chars long"
@@ -71,9 +71,9 @@ def degenerate_dir(spark, tmp_path):
     spark.createDataFrame(rows, DOC_SCHEMA).write.mode("overwrite").parquet(
         str(tmp_path / "documents.parquet")
     )
-    clear_sig_cache(spark)
+    shared.clear(spark, "sig")
     yield str(tmp_path)
-    clear_sig_cache(spark)
+    shared.clear(spark, "sig")
 
 
 @pytest.fixture()
@@ -81,9 +81,9 @@ def empty_dir(spark, tmp_path):
     spark.createDataFrame([], DOC_SCHEMA).write.mode("overwrite").parquet(
         str(tmp_path / "documents.parquet")
     )
-    clear_sig_cache(spark)
+    shared.clear(spark, "sig")
     yield str(tmp_path)
-    clear_sig_cache(spark)
+    shared.clear(spark, "sig")
 
 
 @pytest.mark.parametrize("name", DOC_OPS)
@@ -159,16 +159,16 @@ EMB_OPS = [
 
 @pytest.mark.parametrize("name", EMB_OPS)
 def test_empty_embeddings_yield_empty_results(spark, tmp_path, name):
-    from helium_arango_etl_spark.operators.similarity import clear_emb_cache
+    from helium_arango_etl_spark import shared
 
     spark.createDataFrame([], EMB_SCHEMA).write.mode("overwrite").parquet(
         str(tmp_path / "embeddings.parquet")
     )
-    clear_emb_cache(spark)
+    shared.clear(spark, "emb")
     try:
         assert QUERIES[name](spark, str(tmp_path)).count() == 0
     finally:
-        clear_emb_cache(spark)
+        shared.clear(spark, "emb")
 
 
 def test_propagate_min_labels_convergence_guard(spark):

@@ -511,6 +511,7 @@ def test_exact_demo_guard_refuses_hub_corpus(spark, tmp_path, monkeypatch):
 
     import pytest as _pytest
 
+    from helium_arango_etl_spark import shared
     from helium_arango_etl_spark.operators import graph as G
 
     n = 1100
@@ -539,8 +540,7 @@ def test_exact_demo_guard_refuses_hub_corpus(spark, tmp_path, monkeypatch):
     ).write.parquet(sf + "/region.parquet")
 
     monkeypatch.delenv(G.ALLOW_EXACT_DEMO_ENV, raising=False)
-    G.clear_edge_cache(spark)
-    G._FANIN_CACHE.pop(spark, None)
+    shared.clear(spark, "witness", "fanin")
     with _pytest.raises(RuntimeError, match="co_witness_pairs_capped"):
         G.co_witness_pairs(spark, sf)
     with _pytest.raises(RuntimeError, match="tip_decomposition_capped"):
@@ -551,10 +551,9 @@ def test_exact_demo_guard_refuses_hub_corpus(spark, tmp_path, monkeypatch):
 
     # explicit opt-in restores the demo (fresh caches so the guard re-runs)
     monkeypatch.setenv(G.ALLOW_EXACT_DEMO_ENV, "1")
-    G.clear_edge_cache(spark)
-    G._FANIN_CACHE.pop(spark, None)
+    shared.clear(spark, "witness", "fanin")
     assert G.co_witness_pairs(spark, sf).count() == n
-    G.clear_edge_cache(spark)
+    shared.clear(spark, "witness")
 
     # the corpus-squared ANN demo has the same guard on vector count
     from helium_arango_etl_spark.operators import similarity as S
@@ -571,10 +570,10 @@ def test_exact_demo_guard_refuses_hub_corpus(spark, tmp_path, monkeypatch):
         F.lit("l").alias("label"),
     ).write.parquet(sf2 + "/embeddings.parquet")
     monkeypatch.delenv(G.ALLOW_EXACT_DEMO_ENV, raising=False)
-    S.clear_emb_cache(spark)
+    shared.clear(spark, "emb")
     with _pytest.raises(RuntimeError, match="mutual_knn_graph_lsh"):
         S.mutual_knn_graph(spark, sf2)
-    S.clear_emb_cache(spark)
+    shared.clear(spark, "emb")
 
 
 def test_neighbor_cap_bounds_projection_hub(spark):

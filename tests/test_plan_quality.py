@@ -76,18 +76,14 @@ def test_city_metrics_single_shuffle(spark, sf_dir):
     """city_graph_metrics must shuffle exactly once (on city_key): the
     keep-latest dedup happens inside the pandas group, so a second
     window-style exchange is a regression."""
-    from helium_arango_etl_spark.operators import graph as G
+    from helium_arango_etl_spark import shared
 
     # pin the UNCACHED build: registry calls serve a persisted combined
     # metrics table over a persisted edge table, so drop both cache
     # entries before reading the plan
-    for df in G._METRICS_CACHE.pop(spark, {}).values():
-        df.unpersist()
-    G.clear_edge_cache(spark)
+    shared.clear(spark, "metrics", "witness")
     plan = plan_of(QUERIES["city_graph_metrics"](spark, sf_dir))
-    for df in G._METRICS_CACHE.pop(spark, {}).values():
-        df.unpersist()
-    G.clear_edge_cache(spark)
+    shared.clear(spark, "metrics", "witness")
     # formatted mode: shuffle nodes print as "(N) Exchange"; broadcasts as
     # "(N) BroadcastExchange".  Exactly ONE keyed (hashpartitioning)
     # shuffle — the city_key one — may appear; the io.spread round-robin
@@ -144,11 +140,11 @@ def test_near_dup_keep_no_cartesian(spark, sf_dir):
     """near_dup_keep composes exact dedup + LSH verify + two anti-joins; at
     corpus scale any cartesian/nested-loop pair formation would be fatal, and
     the final removals must stay semi/anti joins (keyed sets, no bodies)."""
-    from helium_arango_etl_spark.operators.dedup import clear_sig_cache
+    from helium_arango_etl_spark import shared
 
-    clear_sig_cache(spark)
+    shared.clear(spark, "sig")
     plan = plan_of(QUERIES["near_dup_keep"](spark, sf_dir))
-    clear_sig_cache(spark)
+    shared.clear(spark, "sig")
     assert "CartesianProduct" not in plan, plan
     assert "LeftAnti" in plan, plan
     assert "LeftSemi" in plan, plan
@@ -294,9 +290,9 @@ def test_neighbor_cap_reaches_physical_plan(spark, sf_dir):
 def test_ann_recall_audit_broadcasts_queries(spark, sf_dir):
     """Both rankings in the recall audit must broadcast the bounded query
     block — a SortMergeJoin would shuffle the whole corpus per ranking."""
-    from helium_arango_etl_spark.operators.similarity import clear_emb_cache
+    from helium_arango_etl_spark import shared
 
-    clear_emb_cache(spark)
+    shared.clear(spark, "emb")
     plan = plan_of(QUERIES["ann_recall_audit"](spark, sf_dir))
     assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan, plan
     assert "SortMergeJoin" not in plan, plan
@@ -331,9 +327,9 @@ def test_pq_topk_broadcast_and_bounded_sort(spark, sf_dir):
     """PQ scoring must be map-side: codebook and lookup-table rows join as
     broadcasts (never SMJ) and the top-k is TakeOrderedAndProject, not a
     global sort of the scored corpus."""
-    from helium_arango_etl_spark.operators.similarity import clear_emb_cache
+    from helium_arango_etl_spark import shared
 
-    clear_emb_cache(spark)
+    shared.clear(spark, "emb")
     plan = plan_of(QUERIES["pq_topk"](spark, sf_dir))
     assert "SortMergeJoin" not in plan, plan
     assert "TakeOrderedAndProject" in plan, plan
@@ -446,9 +442,9 @@ def test_hard_negatives_broadcasts_anchor_block(spark, sf_dir):
     """The anchor block must broadcast (inequality join -> broadcast
     nested loop over the TINY side only); the corpus is scanned, never
     shuffled, and there is no unhinted cartesian."""
-    from helium_arango_etl_spark.operators.similarity import clear_emb_cache
+    from helium_arango_etl_spark import shared
 
-    clear_emb_cache(spark)
+    shared.clear(spark, "emb")
     plan = plan_of(QUERIES["hard_negatives"](spark, sf_dir))
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan, plan
     assert "SortMergeJoin" not in plan, plan
@@ -458,9 +454,9 @@ def test_hard_negatives_broadcasts_anchor_block(spark, sf_dir):
 def test_mrl_prefix_recall_broadcasts_queries(spark, sf_dir):
     """Both the full-dim and prefix-dim rankings broadcast the bounded
     query block; the overlap join is K x Q rows, also broadcast."""
-    from helium_arango_etl_spark.operators.similarity import clear_emb_cache
+    from helium_arango_etl_spark import shared
 
-    clear_emb_cache(spark)
+    shared.clear(spark, "emb")
     plan = plan_of(QUERIES["mrl_prefix_recall"](spark, sf_dir))
     assert "SortMergeJoin" not in plan, plan
     assert "CartesianProduct" not in plan, plan
@@ -471,9 +467,9 @@ def test_semantic_dedup_no_cartesian_pairs(spark, sf_dir):
     nested-loop); within-cluster pair formation must be a keyed join on
     centroid_id — an unkeyed pair join would be the O(n^2) SemDeDup
     explicitly exists to avoid."""
-    from helium_arango_etl_spark.operators.similarity import clear_emb_cache
+    from helium_arango_etl_spark import shared
 
-    clear_emb_cache(spark)
+    shared.clear(spark, "emb")
     plan = plan_of(QUERIES["semantic_dedup"](spark, sf_dir))
     assert "CartesianProduct" not in plan, plan
     # the within-cluster self-join keys on centroid_id (hash or sort-merge
@@ -506,9 +502,9 @@ def test_mmr_rerank_no_cartesian(spark, sf_dir):
     """Selection steps operate on the checkpointed Q x C candidate/pair
     tables only; no step may fall back to a cartesian or an unkeyed
     sort-merge over the corpus."""
-    from helium_arango_etl_spark.operators.similarity import clear_emb_cache
+    from helium_arango_etl_spark import shared
 
-    clear_emb_cache(spark)
+    shared.clear(spark, "emb")
     plan = plan_of(QUERIES["mmr_rerank"](spark, sf_dir))
     assert "CartesianProduct" not in plan, plan
 
@@ -547,9 +543,9 @@ def test_ndcg_rides_tokenized_corpus_cache(spark, sf_dir):
 def test_hybrid_rrf_operates_on_bounded_inputs(spark, sf_dir):
     """Both fused rankings are TakeOrderedAndProject-bounded before the
     full-outer fusion — the fusion join never sees corpus-sized input."""
-    from helium_arango_etl_spark.operators.similarity import clear_emb_cache
+    from helium_arango_etl_spark import shared
 
-    clear_emb_cache(spark)
+    shared.clear(spark, "emb")
     plan = plan_of(QUERIES["hybrid_rrf_topk"](spark, sf_dir))
     assert plan.count("TakeOrderedAndProject") >= 2, plan
     assert "CartesianProduct" not in plan, plan
@@ -559,9 +555,9 @@ def test_prototype_distances_broadcasts_prototypes(spark, sf_dir):
     """The |labels|-row prototype table must broadcast back onto the
     corpus scan; the only corpus-sized shuffle is the (label, dim) mean
     reduction (map-side combined)."""
-    from helium_arango_etl_spark.operators.similarity import clear_emb_cache
+    from helium_arango_etl_spark import shared
 
-    clear_emb_cache(spark)
+    shared.clear(spark, "emb")
     plan = plan_of(QUERIES["prototype_distances"](spark, sf_dir))
     assert "BroadcastHashJoin" in plan, plan
     assert "SortMergeJoin" not in plan, plan
@@ -809,9 +805,9 @@ def test_mutual_knn_lsh_no_cartesian(spark, sf_dir):
     """The LSH-sourced mutual-kNN twin must form candidate pairs via the
     bucket equi-join — never the corpus² nested loop the exact form
     deliberately demos (VERDICT r5 #2)."""
-    from helium_arango_etl_spark.operators.similarity import clear_emb_cache
+    from helium_arango_etl_spark import shared
 
-    clear_emb_cache(spark)
+    shared.clear(spark, "emb")
     plan = plan_of(QUERIES["mutual_knn_graph_lsh"](spark, sf_dir))
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
@@ -820,9 +816,9 @@ def test_mutual_knn_lsh_no_cartesian(spark, sf_dir):
 def test_knn_hubness_no_cartesian(spark, sf_dir):
     """Hubness audit scores only bucket-mates — the same no-corpus²
     discipline as mutual_knn_graph_lsh."""
-    from helium_arango_etl_spark.operators.similarity import clear_emb_cache
+    from helium_arango_etl_spark import shared
 
-    clear_emb_cache(spark)
+    shared.clear(spark, "emb")
     plan = plan_of(QUERIES["knn_hubness_audit"](spark, sf_dir))
     assert "CartesianProduct" not in plan, plan
     # the ONLY nested loop is the 1-row total × 1-row linked-count scalar

@@ -623,16 +623,14 @@ def test_atkinson_matches_numpy(spark, sf_dir):
 
 def test_tokenized_corpus_cache_contract(spark, sf_dir):
     """The retrieval family's shared materialization: same object per
-    (session, sf_dir); clear_tok_cache drops it; the projection carries
-    exactly the query-agnostic columns and dl == size(t)."""
+    (session, sf_dir); shared.clear(spark, "tok") drops it; the projection
+    carries exactly the query-agnostic columns and dl == size(t)."""
     from pyspark.sql import functions as F
 
-    from helium_arango_etl_spark.operators.textops import (
-        clear_tok_cache,
-        tokenized_corpus,
-    )
+    from helium_arango_etl_spark import shared
+    from helium_arango_etl_spark.operators.textops import tokenized_corpus
 
-    clear_tok_cache(spark)
+    shared.clear(spark, "tok")
     a = tokenized_corpus(spark, sf_dir)
     assert tokenized_corpus(spark, sf_dir) is a
     assert set(a.columns) == {"doc_id", "source", "lang", "t", "dl"}
@@ -643,7 +641,7 @@ def test_tokenized_corpus_cache_contract(spark, sf_dir):
     assert n_docs == duckdb.sql(
         f"SELECT count(*) FROM '{sf_dir}/documents.parquet'"
     ).fetchone()[0]
-    clear_tok_cache(spark)
+    shared.clear(spark, "tok")
     b = tokenized_corpus(spark, sf_dir)
     assert b is not a
-    clear_tok_cache(spark)
+    shared.clear(spark, "tok")

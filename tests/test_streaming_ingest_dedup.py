@@ -8,11 +8,11 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from helium_arango_etl_spark import shared
 from helium_arango_etl_spark.io import read_table
 from helium_arango_etl_spark.operators.dedup import (
     NEAR_DUP_THRESH,
     NEW_MIN_ID,
-    clear_sig_cache,
     incremental_dedup,
     ngram_jaccard_pairs,
 )
@@ -33,7 +33,7 @@ def test_stream_screen_matches_batch_incremental(spark, sf_dir, tmp_path):
     arriving.filter(F.col("doc_id") % 2 == 0).coalesce(1).write.mode("overwrite").parquet(inc_dir)
     arriving.filter(F.col("doc_id") % 2 == 1).coalesce(1).write.mode("append").parquet(inc_dir)
 
-    clear_sig_cache(spark)
+    shared.clear(spark, "sig")
     try:
         out_dir = run_ingest_screen(
             spark, corpus_dir, inc_dir, str(tmp_path / "admitted"), str(tmp_path / "ckpt")
@@ -42,11 +42,11 @@ def test_stream_screen_matches_batch_incremental(spark, sf_dir, tmp_path):
             r["doc_id"] for r in spark.read.parquet(out_dir).select("doc_id").collect()
         }
     finally:
-        clear_sig_cache(spark)
+        shared.clear(spark, "sig")
 
     # batch reference over the ORIGINAL table: corpus-boundary dups plus
     # verified new-new pairs, replayed in arrival order.
-    clear_sig_cache(spark)
+    shared.clear(spark, "sig")
     try:
         flagged = {r["doc_id"] for r in incremental_dedup(spark, sf_dir).collect()}
         nn_pairs = [
@@ -58,7 +58,7 @@ def test_stream_screen_matches_batch_incremental(spark, sf_dir, tmp_path):
         ]
         all_new = sorted(r["doc_id"] for r in arriving.select("doc_id").collect())
     finally:
-        clear_sig_cache(spark)
+        shared.clear(spark, "sig")
 
     expected: set = set()
     for batch in (
@@ -105,7 +105,7 @@ def test_restart_keeps_screening_against_prior_admissions(spark, sf_dir, tmp_pat
             arriving.filter(flt).coalesce(1).write.mode(
                 "append" if i else "overwrite"
             ).parquet(inc)
-            clear_sig_cache(spark)
+            shared.clear(spark, "sig")
             run_ingest_screen(spark, corpus_dir, inc, out, ckpt)
         return {r["doc_id"] for r in spark.read.parquet(out).select("doc_id").collect()}
 
@@ -114,7 +114,7 @@ def test_restart_keeps_screening_against_prior_admissions(spark, sf_dir, tmp_pat
     inc = str(tmp_path / "in_cont")
     arriving.filter(evens).coalesce(1).write.mode("overwrite").parquet(inc)
     arriving.filter(odds).coalesce(1).write.mode("append").parquet(inc)
-    clear_sig_cache(spark)
+    shared.clear(spark, "sig")
     out_cont = run_ingest_screen(
         spark, corpus_dir, inc, str(tmp_path / "out_cont"), str(tmp_path / "ck_cont")
     )
@@ -130,7 +130,7 @@ def test_restart_keeps_screening_against_prior_admissions(spark, sf_dir, tmp_pat
     last = store.last_batch_id()
     n_before = spark.read.parquet(str(tmp_path / "out_restart")).count()
     batch = arriving.filter(odds)
-    clear_sig_cache(spark)
+    shared.clear(spark, "sig")
     assert (
         ingest_batch(
             spark, store, corpus_dir, str(tmp_path / "out_restart"), batch, last

@@ -183,7 +183,8 @@ def test_dedup_clusters_transitive_chain(spark, tmp_path):
     """A ~ B and B ~ C (but A !~ C directly) must land in ONE cluster with
     cluster_id = min doc_id — the transitivity that greedy pairwise
     keep-smallest (near_dup_keep) cannot express."""
-    from helium_arango_etl_spark.operators.dedup import clear_sig_cache, dedup_clusters
+    from helium_arango_etl_spark import shared
+    from helium_arango_etl_spark.operators.dedup import dedup_clusters
 
     base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
     drift = base.split()
@@ -197,7 +198,7 @@ def test_dedup_clusters_transitive_chain(spark, tmp_path):
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string, lang string, source string, n_chars long")
     df.write.mode("overwrite").parquet(str(tmp_path / "documents.parquet"))
-    clear_sig_cache(spark)
+    shared.clear(spark, "sig")
     try:
         out = {r["doc_id"]: r for r in dedup_clusters(spark, str(tmp_path)).collect()}
         # the chain 0-1-2 collapses to cluster 0 whether or not 0~2 verifies
@@ -208,13 +209,14 @@ def test_dedup_clusters_transitive_chain(spark, tmp_path):
         assert out[0]["cluster_size"] == 3
         assert out[3]["cluster_id"] == 3 and out[3]["cluster_size"] == 1
     finally:
-        clear_sig_cache(spark)
+        shared.clear(spark, "sig")
 
 
 def test_segment_dedup_strips_shared_boilerplate(spark, tmp_path):
     """A segment (8-token chunk) shared by two docs is boilerplate and is
     removed from both; unique segments survive in order."""
-    from helium_arango_etl_spark.operators.dedup import clear_sig_cache, segment_dedup
+    from helium_arango_etl_spark import shared
+    from helium_arango_etl_spark.operators.dedup import segment_dedup
 
     boiler = "one two three four five six seven eight"
     u1 = "u1a u1b u1c u1d u1e u1f u1g u1h"
@@ -225,14 +227,14 @@ def test_segment_dedup_strips_shared_boilerplate(spark, tmp_path):
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string, lang string, source string, n_chars long")
     df.write.mode("overwrite").parquet(str(tmp_path / "documents.parquet"))
-    clear_sig_cache(spark)
+    shared.clear(spark, "sig")
     try:
         out = {r["doc_id"]: r for r in segment_dedup(spark, str(tmp_path)).collect()}
         assert out[0]["n_segments"] == 2 and out[0]["n_boiler_segments"] == 1
         assert out[0]["clean_text"] == u1
         assert out[1]["clean_text"] == u2
     finally:
-        clear_sig_cache(spark)
+        shared.clear(spark, "sig")
 
 
 def test_pii_scrub_masks_constructed_pii(spark, tmp_path):

@@ -1,12 +1,13 @@
-"""Capture .explain("formatted") for headline queries -> plans/r11/<q>_<tag>.txt.
+"""Capture .explain("formatted") for headline queries -> plans/r<round>/<q>_<tag>.txt.
 
-Usage: python tools/capture_plans_r11.py <tag> [query ...]
+Usage: python tools/capture_plans.py <round> <tag> [query ...]
 With no query args, captures every headline query from bench.py.
 
-Plan capture is untimed — safe to run alongside other work.  Shared-table
-caches are reset the same way bench.py does so each plan reflects the shape
-the bench actually pays (the persisted shared tables appear as
-InMemoryTableScan in downstream consumers, by design).
+Plan capture is untimed — safe to run alongside other work.  Each step
+goes through bench.prepare, so shared tables are cleared exactly as the
+bench clears them and each plan reflects the shape the bench actually
+pays (the persisted shared tables appear as InMemoryTableScan in
+downstream consumers, by design).
 """
 
 from __future__ import annotations
@@ -18,21 +19,19 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bench import HEADLINE  # noqa: E402
-from helium_arango_etl_spark.operators import similarity as S  # noqa: E402
-from helium_arango_etl_spark.operators import textops as T  # noqa: E402
+from bench import HEADLINE, PREPARE_STEPS, prepare  # noqa: E402
 from helium_arango_etl_spark.registry import QUERIES  # noqa: E402
 from helium_arango_etl_spark.session import get_spark  # noqa: E402
 
 
 def main() -> None:
-    tag = sys.argv[1] if len(sys.argv) > 1 else "before"
-    names = sys.argv[2:] or [
-        n for n in HEADLINE if n in QUERIES or n in ("emb_prepare", "tok_prepare")
-    ]
+    if len(sys.argv) < 3:
+        sys.exit(__doc__)
+    rnd, tag = sys.argv[1], sys.argv[2]
+    names = sys.argv[3:] or [n for n in HEADLINE if n in QUERIES or n in PREPARE_STEPS]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     out_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r11"
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", f"r{rnd}"
     )
     os.makedirs(out_dir, exist_ok=True)
     spark = get_spark(app_name=f"plans-{tag}")
@@ -40,14 +39,7 @@ def main() -> None:
     for name in names:
         spark.sparkContext.setJobDescription(f"plan:{name}")
         try:
-            if name == "emb_prepare":
-                S.clear_emb_cache(spark)
-                df = S.embedding_table(spark, sf_dir)
-            elif name == "tok_prepare":
-                T.clear_tok_cache(spark)
-                df = T.tokenized_corpus(spark, sf_dir)
-            else:
-                df = QUERIES[name](spark, sf_dir)
+            df = prepare(spark, sf_dir, name)
             buf = io.StringIO()
             with contextlib.redirect_stdout(buf):
                 df.explain("formatted")

@@ -2,9 +2,10 @@
 
 Usage: python tools/microbench.py [-nN] <query> [query ...]
 
-Same methodology as bench.py (noop sink, shared-cache resets, warmup
-pass then min of N measured passes) but only for the named queries —
-the fast inner loop for before/after numbers on a single optimization.
+Same methodology as bench.py (noop sink, bench.prepare's shared-table
+clears, warmup pass then min of N measured passes) but only for the named
+queries — the fast inner loop for before/after numbers on a single
+optimization.
 """
 
 from __future__ import annotations
@@ -16,11 +17,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from helium_arango_etl_spark.operators import dedup as D  # noqa: E402
-from helium_arango_etl_spark.operators import graph as G  # noqa: E402
-from helium_arango_etl_spark.operators import similarity as S  # noqa: E402
-from helium_arango_etl_spark.operators import textops as T  # noqa: E402
-from helium_arango_etl_spark.registry import QUERIES  # noqa: E402
+from bench import prepare  # noqa: E402
 from helium_arango_etl_spark.session import get_spark  # noqa: E402
 
 
@@ -36,26 +33,9 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     def run(name: str) -> float:
-        if name == "city_graph_metrics":
-            for df in G._METRICS_CACHE.pop(spark, {}).values():
-                df.unpersist(blocking=True)
-        if name == "witness_subgraph":
-            G.clear_edge_cache(spark)
-        if name == "emb_prepare":
-            S.clear_emb_cache(spark)
-            t0 = time.perf_counter()
-            S.embedding_table(spark, sf_dir).write.mode("overwrite").format("noop").save()
-            return time.perf_counter() - t0
-        if name == "tok_prepare":
-            T.clear_tok_cache(spark)
-            t0 = time.perf_counter()
-            T.tokenized_corpus(spark, sf_dir).write.mode("overwrite").format("noop").save()
-            return time.perf_counter() - t0
-        if name == "lsh_candidate_pairs":
-            D.clear_sig_cache(spark)
         spark.sparkContext.setJobDescription(f"microbench:{name}")
         t0 = time.perf_counter()
-        QUERIES[name](spark, sf_dir).write.mode("overwrite").format("noop").save()
+        prepare(spark, sf_dir, name).write.mode("overwrite").format("noop").save()
         return time.perf_counter() - t0
 
     # whole-list passes (warmup + n measured), per-query min over the

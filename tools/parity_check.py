@@ -17,8 +17,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb  # noqa: E402
 
+from helium_arango_etl_spark import shared  # noqa: E402
 from helium_arango_etl_spark.registry import ORACLE, QUERIES  # noqa: E402
-from tools.random_audit import _canon, _clear_caches, tables_list  # noqa: E402
+from tools.random_audit import _canon, tables_list  # noqa: E402
 
 
 def main() -> int:
@@ -38,7 +39,7 @@ def main() -> int:
         else:
             continue
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{src}'")
-    _clear_caches(spark)
+    shared.clear(spark)
     bad = 0
     for name in names:
         if name not in ORACLE:

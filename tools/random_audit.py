@@ -48,6 +48,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import duckdb  # noqa: E402
 from pyspark.sql import SparkSession  # noqa: E402
 
+from helium_arango_etl_spark import shared  # noqa: E402
 from helium_arango_etl_spark.registry import (  # noqa: E402
     EXACT_DEMO_QUERIES,
     ORACLE,
@@ -276,18 +277,6 @@ def _canon(v):
     return str(v)
 
 
-def _clear_caches(spark: SparkSession) -> None:
-    from helium_arango_etl_spark.operators.dedup import clear_sig_cache
-    from helium_arango_etl_spark.operators.graph import clear_edge_cache
-    from helium_arango_etl_spark.operators.similarity import clear_emb_cache
-    from helium_arango_etl_spark.operators.textops import clear_tok_cache
-
-    clear_sig_cache(spark)
-    clear_edge_cache(spark)
-    clear_emb_cache(spark)
-    clear_tok_cache(spark)
-
-
 def main() -> int:
     args = sys.argv[1:]
     degen = "--degen" in args
@@ -319,7 +308,7 @@ def main() -> int:
             con.execute(
                 f"CREATE VIEW {t} AS SELECT * FROM '{tmp}/{t}.parquet/*.parquet'"
             )
-        _clear_caches(spark)
+        shared.clear(spark)
         n_ok = 0
         for name in sorted(ORACLE):
             try:
@@ -347,7 +336,7 @@ def main() -> int:
                     f"seed {seed} {name} MISMATCH spark={len(srows)}"
                     f" duck={len(drows)} first_s={srows[:1]} first_d={drows[:1]}"
                 )
-        _clear_caches(spark)
+        shared.clear(spark)
         print(f"seed {seed}: {n_ok}/{len(ORACLE)} MATCH")
     # non-vacuity guard: every DRIVER-VACUOUS twin must have produced
     # real rows on at least one audited seed (VERDICT r9 #2)

@@ -49,6 +49,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from helium_arango_etl_spark import shared
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 OUT_BASE = os.path.join(REPO, ".tmp", "hub_probe")
@@ -123,21 +125,15 @@ def build_corpus(spark: SparkSession, h: int, out_dir: str) -> None:
         out.write.mode("overwrite").parquet(f"{out_dir}/{t}.parquet")
 
 
-def _clear(spark: SparkSession) -> None:
-    from helium_arango_etl_spark.operators.graph import clear_edge_cache
-
-    clear_edge_cache(spark)
-
-
 def timed(spark: SparkSession, fn, sf_dir: str):
     """(best_sec, rows) over two cache-cleared runs in the main session."""
     best, rows = float("inf"), -1
     for _ in range(2):
-        _clear(spark)
+        shared.clear(spark, "witness")
         t0 = time.time()
         rows = fn(spark, sf_dir).count()
         best = min(best, time.time() - t0)
-    _clear(spark)
+    shared.clear(spark, "witness")
     return round(best, 3), rows
 
 
@@ -218,7 +214,7 @@ def main() -> None:
     # the ledger first: neighbor_cap_stats must price the hub exactly
     stats = {}
     for name, d in dirs.items():
-        _clear(spark)
+        shared.clear(spark, "witness")
         row = G.neighbor_cap_stats(spark, d).collect()[0]
         stats[name] = {k: int(v) for k, v in row.asDict().items()}
         print(f"neighbor_cap_stats {name}: {stats[name]}", file=sys.stderr)

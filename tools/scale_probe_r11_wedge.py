@@ -44,6 +44,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from helium_arango_etl_spark import shared
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 OUT_BASE = os.path.join(REPO, ".tmp", "wedge_probe")
@@ -130,12 +132,6 @@ def build_corpus(spark: SparkSession, h: int, out_dir: str) -> None:
         out.write.mode("overwrite").parquet(f"{out_dir}/{t}.parquet")
 
 
-def _clear(spark: SparkSession) -> None:
-    from helium_arango_etl_spark.operators.graph import clear_edge_cache
-
-    clear_edge_cache(spark)
-
-
 def _session(app: str) -> SparkSession:
     return (
         SparkSession.builder.master(
@@ -207,7 +203,7 @@ def main() -> None:
     # projection (string order on the 'S<id>' node names)
     split = {}
     for name, d in dirs.items():
-        _clear(spark)
+        shared.clear(spark, "witness")
         proj = G._co_witness_pairs_capped_cached(spark, d)
         hub = f"S{HUB_SUPP}"
         row = proj.agg(
@@ -219,7 +215,7 @@ def main() -> None:
             "out_hub": int(row["out_hub"] or 0),
         }
         print(f"{name} oriented split: {split[name]}", file=sys.stderr)
-        _clear(spark)
+        shared.clear(spark, "witness")
 
     results = {"split": split, "probes": {}}
     for pname in _probes():

@@ -41,6 +41,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from helium_arango_etl_spark import shared
+
 # this probe EXISTS to measure the exact demo's quadratic blow-up at 10x
 # fan-in — explicitly opt past the r10 exact-demo scale guard
 os.environ.setdefault("SPARK_GRAFT_ALLOW_EXACT_DEMO", "1")
@@ -89,20 +91,14 @@ def build_corpus(spark: SparkSession) -> None:
         out.write.mode("overwrite").parquet(f"{OUT_DIR}/{t}.parquet")
 
 
-def _clear(spark: SparkSession) -> None:
-    from helium_arango_etl_spark.operators.graph import clear_edge_cache
-
-    clear_edge_cache(spark)
-
-
 def timed(spark: SparkSession, fn, sf_dir: str) -> tuple[float, int]:
     best, rows = float("inf"), -1
     for _ in range(2):
-        _clear(spark)
+        shared.clear(spark, "witness")
         t0 = time.time()
         rows = fn(spark, sf_dir).count()
         best = min(best, time.time() - t0)
-    _clear(spark)
+    shared.clear(spark, "witness")
     return round(best, 3), rows
 
 
@@ -129,7 +125,7 @@ def main() -> None:
     # analytic cap accounting first (cheap: sizes only, no pair emit)
     stats = {}
     for scale, d in (("1x", SF_DIR), ("10x", OUT_DIR)):
-        _clear(spark)
+        shared.clear(spark, "witness")
         row = G.co_witness_bucket_stats(spark, d).collect()[0]
         stats[scale] = {k: int(v) for k, v in row.asDict().items()}
         print(f"bucket stats {scale}: {stats[scale]}", file=sys.stderr)

@@ -35,6 +35,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from helium_arango_etl_spark import shared
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 OUT_DIR = os.path.join(REPO, ".tmp", "sf1x_emb")
@@ -84,20 +86,14 @@ def build_corpus(spark: SparkSession) -> None:
         out.write.mode("overwrite").parquet(f"{OUT_DIR}/{t}.parquet")
 
 
-def _clear(spark: SparkSession) -> None:
-    from helium_arango_etl_spark.operators.similarity import clear_emb_cache
-
-    clear_emb_cache(spark)
-
-
 def timed(spark: SparkSession, fn, sf_dir: str) -> tuple[float, int]:
     best, rows = float("inf"), -1
     for _ in range(2):
-        _clear(spark)
+        shared.clear(spark, "emb")
         t0 = time.time()
         rows = fn(spark, sf_dir).count()
         best = min(best, time.time() - t0)
-    _clear(spark)
+    shared.clear(spark, "emb")
     return round(best, 3), rows
 
 
